@@ -33,7 +33,10 @@ import shutil
 import threading
 import time
 import uuid
+from collections.abc import Callable
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -43,6 +46,64 @@ def _exists(spark: SparkSession, path: str) -> bool:
     # local-fs check is enough for this build; on HDFS/S3 use the Hadoop FS
     # API via spark._jvm — kept simple deliberately.
     return os.path.exists(path)
+
+
+def _hidden(name: str) -> bool:
+    # Spark's file index skips `_`/`.`-prefixed names (_SUCCESS,
+    # _temporary/, .crc) but keeps `_col=value` partition directories
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def parquet_row_count(path: str) -> int:
+    """Row count of the parquet table at ``path``, summed from the
+    footers of the files a Spark scan of ``path`` would read — hidden
+    names are skipped, hive partition directories are walked. Equal to
+    ``spark.read.parquet(path).count()`` without running a Spark job
+    (that count costs ~3 jobs per table). Same local/POSIX scope as
+    :func:`_exists`; raises FileNotFoundError for a missing table."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(path):
+        raise FileNotFoundError(path)
+    total = 0
+    for dirpath, dirnames, files in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not _hidden(d)]
+        for f in files:
+            if not _hidden(f):
+                total += pq.read_metadata(os.path.join(dirpath, f)).num_rows
+    return total
+
+
+def write_concurrently(spark: SparkSession, writes: list[Callable[[], None]]) -> None:
+    """Run independent table writes at once and wait for all of them.
+
+    Per-table writes of a small star schema are dominated by per-job
+    driver overhead (planning, scheduling, commit), not data volume, so
+    issuing them one after another leaves the cores idle; Spark's
+    scheduler accepts jobs from several threads. Each write runs through
+    ``inheritable_thread_target``, so its jobs keep the caller's job
+    group, description and scheduler pool (plain threads would lose
+    them, and with them job cancellation). At most
+    ``defaultParallelism`` writes run at a time.
+
+    The writes must touch disjoint tables (each writer holds its own
+    :func:`table_lock`). On a failure, writes not yet started are
+    cancelled, the running ones finish, and the first failure (in list
+    order) is raised — no write is left half-done behind the caller."""
+    if not writes:
+        return
+    workers = min(len(writes), spark.sparkContext.defaultParallelism)
+    pool = ThreadPoolExecutor(max_workers=workers, thread_name_prefix="lake-write")
+    try:
+        # wrapped here, in the caller's thread: each write gets its own
+        # copy of the caller's local properties
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+        wait(futures, return_when=FIRST_EXCEPTION)
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+    for f in futures:
+        if not f.cancelled() and f.exception() is not None:
+            raise f.exception()
 
 
 class TableLockTimeout(RuntimeError):
@@ -212,11 +273,14 @@ def append_unique(
     re-run, thanks to idempotency) covers in production.
 
     Concurrency: the whole read-merge-swap runs under :func:`table_lock`,
-    so simultaneous writers serialize instead of last-swap-wins dropping
-    one side's rows (and two concurrent appenders can't collide in the
-    committer's shared ``_temporary`` dir). Guarantee: N concurrent
-    append_unique calls with disjoint keys leave ALL N deltas in the
-    table; overlapping keys keep first-writer-wins idempotency."""
+    so simultaneous writers of the SAME table serialize instead of
+    last-swap-wins dropping one side's rows (and two concurrent appenders
+    can't collide in the committer's shared ``_temporary`` dir).
+    Guarantee: N concurrent append_unique calls with disjoint keys leave
+    ALL N deltas in the table; overlapping keys keep first-writer-wins
+    idempotency. Writes to DIFFERENT tables hold different locks and run
+    in parallel — ingest publishes its independent dims/xrefs together
+    via :func:`write_concurrently`, then the fact."""
     new_df = new_df.dropDuplicates(keys)
     with table_lock(path):
         if not _exists(spark, path):

@@ -17,6 +17,7 @@ under `dim_npi` / `dim_npi_address` and `StarLake.load` picks them up.
 from __future__ import annotations
 
 import json
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -208,18 +209,24 @@ def build_npi_dims(
     refresh=True → latest-merge (newest last_updated wins per key; the
     reference's big-table DuckDB merge, utils_nppes.py:215-253).
 
-    Table names match what StarLake.load expects. Returns row counts."""
-    from mrf_etl_spark.io.writers import latest_merge, upsert_by_key
+    Table names match what StarLake.load expects; the two tables are
+    independent and publish concurrently. Returns row counts (from the
+    Parquet footers)."""
+    from mrf_etl_spark.io.writers import (
+        latest_merge,
+        parquet_row_count,
+        upsert_by_key,
+        write_concurrently,
+    )
 
     dim = dim_npi_from_payloads(payloads, npi_col, payload_col, nppes_fetched)
     addr = dim_npi_address_from_payloads(payloads, npi_col, payload_col)
     writer = latest_merge if refresh else upsert_by_key
-    writer(spark, dim, f"{lake_dir}/dim_npi", keys=DIM_NPI_KEYS)
-    writer(spark, addr, f"{lake_dir}/dim_npi_address", keys=DIM_NPI_ADDRESS_KEYS)
-    return {
-        "dim_npi": spark.read.parquet(f"{lake_dir}/dim_npi").count(),
-        "dim_npi_address": spark.read.parquet(f"{lake_dir}/dim_npi_address").count(),
-    }
+    write_concurrently(spark, [
+        partial(writer, spark, dim, f"{lake_dir}/dim_npi", keys=DIM_NPI_KEYS),
+        partial(writer, spark, addr, f"{lake_dir}/dim_npi_address", keys=DIM_NPI_ADDRESS_KEYS),
+    ])
+    return {name: parquet_row_count(f"{lake_dir}/{name}") for name in ("dim_npi", "dim_npi_address")}
 
 
 def synthetic_npi_payloads(spark: SparkSession, npis: list[str]) -> DataFrame:

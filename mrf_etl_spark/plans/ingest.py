@@ -11,7 +11,15 @@ Idempotency is a *plan property*: deterministic md5 uids + key-scoped
 anti-join writers make re-running a batch a no-op (Data_Schema.md:356-362).
 
 Scale design:
-  * dims/xrefs are tiny → their writers broadcast the key anti-join.
+  * dims/xrefs are tiny → their writers broadcast the key anti-join, and
+    a batch's cost is per-Spark-job overhead, not data. The seven dims/
+    xrefs are independent tables, so they publish concurrently (one
+    thread per write, bounded by the core count, each under its own
+    table lock); the fact publishes only after all of them, so a reader
+    never sees a fact row before its dims.
+  * the returned row counts are summed from the Parquet footers
+    (``parquet_row_count``) — no count-back Spark jobs; same local/POSIX
+    scope as the writers' lock and atomic swap.
   * the fact upsert anti-joins on fact_uid only (column-pruned scan of the
     existing fact); at 100 TB pass `existing_filter` (state+year_month of
     the batch) so the anti-join prunes to the partitions a batch can touch.
@@ -26,6 +34,7 @@ Scale design:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +49,14 @@ from mrf_etl_spark.functions import (
     slugify,
     year_month_from_string,
 )
-from mrf_etl_spark.io import append_unique, conform, upsert_by_key, write_partitioned
+from mrf_etl_spark.io import (
+    append_unique,
+    conform,
+    parquet_row_count,
+    upsert_by_key,
+    write_concurrently,
+    write_partitioned,
+)
 
 
 @dataclass
@@ -210,8 +226,11 @@ def ingest_batch(
     tables = project_dims(base)
     tables.update(project_xrefs(providers_raw, cfg))
 
-    for name, df in tables.items():
-        append_unique(spark, df, f"{lake_dir}/{name}", keys=schemas.TABLE_KEYS[name])
+    # dims/xrefs first (concurrently), the fact only once all are published
+    write_concurrently(spark, [
+        partial(append_unique, spark, df, f"{lake_dir}/{name}", keys=schemas.TABLE_KEYS[name])
+        for name, df in tables.items()
+    ])
 
     fact = build_fact(base, cfg)
     fact_path = f"{lake_dir}/fact_rate"
@@ -234,10 +253,7 @@ def ingest_batch(
             existing_filter=(F.col("state") == cfg.state),
         )
 
-    counts = {}
-    for name in [*tables.keys(), "fact_rate"]:
-        counts[name] = spark.read.parquet(f"{lake_dir}/{name}").count()
-    return counts
+    return {name: parquet_row_count(f"{lake_dir}/{name}") for name in [*tables, "fact_rate"]}
 
 
 def ingest_npi_dims(

@@ -21,11 +21,14 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 from dataclasses import dataclass
+from functools import partial
 from typing import ClassVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
+
+from mrf_etl_spark.io.writers import write_concurrently
 
 
 def like_literal(value: str) -> str:
@@ -896,15 +899,18 @@ class StarLake:
         request then scans a few thousand rollup rows in one pruned
         partition instead of re-aggregating the scoped index slice.
         Refresh = re-materialize touched (state, year_month) partitions,
-        the refresh_market_rates pattern."""
+        the refresh_market_rates pattern. The per-type MVs are independent
+        tables and are written concurrently."""
         import dataclasses
 
         spark = self.fact.sparkSession
         idx = self.search_index()
-        mvs: dict[str, DataFrame] = {}
-        for st in search_types or list(self.SEARCH_ROLLUPS):
+        cols = set(idx.columns)
+        types = list(search_types or self.SEARCH_ROLLUPS)
+
+        def write(st: str) -> None:
             _, _, group_cols, extras = self.SEARCH_ROLLUPS[st]
-            present = [c for c in group_cols if c in idx.columns]
+            present = [c for c in group_cols if c in cols]
             (
                 idx.groupBy("state", "year_month", *present)
                 .agg(*self._rollup_aggs(idx, extras))
@@ -912,7 +918,9 @@ class StarLake:
                 .partitionBy("state", "year_month")
                 .parquet(f"{path}/{st}")
             )
-            mvs[st] = spark.read.parquet(f"{path}/{st}")
+
+        write_concurrently(spark, [partial(write, st) for st in types])
+        mvs = {st: spark.read.parquet(f"{path}/{st}") for st in types}
         return dataclasses.replace(self, search_rollup_mvs=mvs)
 
     def materialize_category_rollups(
@@ -923,16 +931,20 @@ class StarLake:
         category_rollup stat block. The per-value countDistincts ARE the
         final answer at this grain (no merge step), so availability
         becomes a pruned-partition read + order/limit. Drill-downs
-        (source × target grain) stay on the live path."""
+        (source × target grain) stay on the live path. The per-category
+        MVs are independent tables and are written concurrently."""
         import dataclasses
 
         spark = self.fact.sparkSession
         idx = self.search_index()
-        mvs: dict[str, DataFrame] = {}
-        for cat in categories or list(self.CATEGORY_FIELDS):
+        cols = set(idx.columns)
+        cats = [
+            cat for cat in categories or list(self.CATEGORY_FIELDS)
+            if self.CATEGORY_FIELDS[cat] in cols
+        ]
+
+        def write(cat: str) -> None:
             field = self.CATEGORY_FIELDS[cat]
-            if field not in idx.columns:
-                continue
             (
                 idx.filter(F.col(field).isNotNull() & (F.col(field) != ""))
                 .groupBy(
@@ -943,7 +955,9 @@ class StarLake:
                 .partitionBy("state", "year_month")
                 .parquet(f"{path}/{cat}")
             )
-            mvs[cat] = spark.read.parquet(f"{path}/{cat}")
+
+        write_concurrently(spark, [partial(write, cat) for cat in cats])
+        mvs = {cat: spark.read.parquet(f"{path}/{cat}") for cat in cats}
         return dataclasses.replace(self, category_rollup_mvs=mvs)
 
     def materialize_category_stats(self, path: str) -> StarLake:
