@@ -22,9 +22,19 @@ columns on each join side; only the dot is evaluated per pair.
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+# The Arrow-batch kernels below run inside mapInPandas closures. Pickling
+# this module's functions by value lets Python workers run them without
+# importing mrf_etl_spark, which is not on their path unless the driver
+# started in the repo root.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def _elem(col: str, i: int) -> Column:
@@ -1590,6 +1600,44 @@ def embedding_outliers(
 # ------------------------------------------ k-means codebook training
 
 
+def _int8_argmax(qm: np.ndarray, cmat: np.ndarray) -> np.ndarray:
+    """THE int8 assignment kernel. For each row of ``qm`` (n × dim
+    int64), the row position in ``cmat`` (k × dim int64, centroids in
+    ascending-cid order) of the centroid maximizing
+    dot(x, c) / sqrt(|c|²). dot and |c|² are exact int64 (magnitudes
+    ≤ dim·127² — far inside both int64 and the 2^53 double mantissa);
+    the score is double(dot) / sqrt(double(|c|²)), two correctly-rounded
+    IEEE ops, so the DuckDB oracles replay it bit-for-bit. Ties break to
+    the lowest cid (argmax keeps the first max); zero-norm centroids
+    rank last, and rows fall to position 0 (the lowest cid) only when
+    EVERY centroid has zero norm. ``cmat`` must have at least one row."""
+    ns2 = (cmat * cmat).sum(axis=1)
+    valid = np.flatnonzero(ns2 > 0)
+    if not len(valid):
+        return np.zeros(len(qm), dtype=np.int64)
+    scores = (qm @ cmat[valid].T).astype(np.float64) / np.sqrt(
+        ns2[valid].astype(np.float64)
+    )
+    return valid[np.argmax(scores, axis=1)]
+
+
+def _requantize_int8(rows: np.ndarray) -> np.ndarray:
+    """e1's int8 quantization (:func:`quantize_int8`) of each row of a
+    2-D array on the driver: ``round(x / (max|x| / 127))``, all-zero rows
+    to zeros. Bit-identical to Spark's ``F.round(...).cast("int")``,
+    which rounds HALF_UP (half away from zero) on the double: ``np.round``
+    rounds half-even, and ``floor(|y| + 0.5)`` turns 0.49999999999999994
+    into 1, so the tie test runs on the exact fractional part
+    ``|y| - floor(|y|)`` (exact for doubles)."""
+    x = np.asarray(rows, dtype=np.float64)
+    amax = np.abs(x).max(axis=1, keepdims=True)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        a = np.abs(x / (amax / 127.0))
+    fl = np.floor(a)
+    y = np.copysign(fl + (a - fl >= 0.5), x)
+    return np.where(amax == 0, 0, y).astype(np.int32)
+
+
 def kmeans_codebook(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -1613,97 +1661,83 @@ def kmeans_codebook(
       int64s — the two scalar IEEE ops (sqrt, divide) are correctly
       rounded and therefore deterministic across engines, and |x| is
       dropped entirely (constant per vector, argmax-invariant). Ties
-      break to the lowest centroid id; a zero centroid scores NULL and
-      ranks last — identical on both engines;
+      break to the lowest centroid id; a zero centroid ranks last —
+      identical on both engines (:func:`_int8_argmax`);
     - update = per-dimension int64 SUM of the members (cosine is
       scale-invariant, so the un-divided sum IS the spherical mean
-      direction), then REQUANTIZED to int8 by e1's recipe. The
-      requantization is what makes the trainer scale-stable: every
-      dot/norm in every iteration stays ≤ 64·127², independent of
-      corpus size — no overflow cliff at any N, and the trained
-      codebook is already in the persisted index's int8 format;
+      direction), then REQUANTIZED to int8 by e1's recipe
+      (:func:`_requantize_int8`). The requantization is what makes the
+      trainer scale-stable: every dot/norm in every iteration stays
+      ≤ 64·127², independent of corpus size — no overflow cliff at any
+      N, and the trained codebook is already in the persisted index's
+      int8 format;
     - empty clusters keep their previous centroid (n_members = 0).
 
-    Plan shape per iteration (r11): one broadcast of the k-row codebook
-    onto the corpus scan, the argmax as a PER-ROW array fold
-    (:func:`_with_centroid_int8` — the previous shape paid a corpus
-    argmax exchange plus a vid-keyed join of the assignment back onto
-    the vectors), then one map-side-combinable 64-sum agg — the only
-    corpus exchange per iteration now carries k partial-sum rows per
-    task. Inter-iteration state is the k×dim int codebook, lazily
-    persisted (KiB): an EAGER localCheckpoint per iteration was
-    MEASURED 3x SLOWER end-to-end (e6 1.7 -> 5.3 s/run at sf0.1) —
-    each materialization is its own job and the per-job fixed cost
-    dwarfs the planning it saves; the lazy persist runs everything in
-    ONE job and the duplicated plan references read the cache.
+    Execution shape: the k×dim codebook is KiB of driver state, so it
+    lives on the driver as a NumPy array between iterations. The seeds
+    (``vid % seed_mod == 0``) are collected once; each Lloyd iteration
+    is then ONE Spark job with no shuffle — every partition assigns its
+    Arrow batches with the int64 matmul and emits only its partial
+    (pos, svec, n) rows, at most partitions × k rows in total — and the
+    driver sums the partials and requantizes the clusters that got
+    members. ``iters + 1`` jobs, no cached state, and no plan growth
+    with ``iters``. Precondition: ``vec_col`` holds no NULL vectors
+    (the NumPy assignment kernel's).
 
     Returns the trained codebook EXPLODED as
-    (cid, n_members, i, cs): k·dim all-integer rows.
+    (cid, n_members, i, cs): k·dim all-integer rows, as a local frame
+    that carries no corpus lineage.
     """
+    import pandas as pd
+
     q = quantize_int8(emb, vec_col, id_col).select(
         F.col(id_col).alias("vid"), "qvec"
     )
-    cent = q.filter((F.col("vid") % seed_mod) == 0).select(
-        F.col("vid").alias("cid"), F.col("qvec").alias("cvec")
-    ).persist()
-    for _ in range(iters):
-        assigned = _with_centroid_int8(q, cent)
-        sums = (
-            assigned
-            .groupBy("cid")
-            .agg(
-                *[
-                    F.sum(F.element_at("qvec", d + 1).cast("long")).alias(f"_s{d}")
-                    for d in range(dim)
-                ],
-                F.count("*").alias("n_members"),
+    seeds = sorted(
+        (r[0], list(r[1]))
+        for r in q.filter((F.col("vid") % seed_mod) == 0).collect()
+    )
+    cids = np.array([c for c, _ in seeds], dtype=np.int64)
+    cmat = np.array([v for _, v in seeds], dtype=np.int64).reshape(-1, dim)
+    k = len(seeds)
+    n_members = np.zeros(k, dtype=np.int64)
+
+    # one partition's partial sums; each iteration's job pickles this
+    # closure with the codebook as it stands when the job is built
+    def _partials(it):
+        sums = np.zeros_like(cmat)
+        n = np.zeros(k, dtype=np.int64)
+        for pdf in it:
+            if len(pdf.index):
+                qm = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
+                pos = _int8_argmax(qm, cmat)
+                np.add.at(sums, pos, qm)
+                n += np.bincount(pos, minlength=k)
+        hit = np.flatnonzero(n)
+        if len(hit):
+            yield pd.DataFrame(
+                {"pos": hit, "svec": list(sums[hit]), "n": n[hit]}
             )
-            .select(
-                "cid",
-                F.array(*[F.col(f"_s{d}") for d in range(dim)]).alias("svec"),
-                "n_members",
-            )
+
+    for _ in range(iters if k else 0):
+        sums = np.zeros_like(cmat)
+        n_members = np.zeros(k, dtype=np.int64)
+        partials = q.select("qvec").mapInPandas(
+            _partials, "pos int, svec array<long>, n long"
         )
-        amax = F.array_max(
-            F.transform("svec", lambda s: F.abs(s.cast("double")))
-        )
-        cq = F.when(
-            amax == 0, F.transform("svec", lambda s: F.lit(0))
-        ).otherwise(
-            F.transform(
-                "svec",
-                lambda s: F.round(
-                    s.cast("double") / (amax / F.lit(127.0))
-                ).cast("int"),
-            )
-        )
-        new = sums.select("cid", cq.alias("_ncv"), "n_members")
-        # keep-previous via ONE left join + coalesce (r11): the former
-        # unionByName(new, cent.anti_join(new)) referenced cent AND new
-        # twice each — 3 references to the prior iteration per round,
-        # 3^iters plan growth (q10's executed string printed 165
-        # exchanges and driver planning dominated, guide §7.3). The
-        # left-join form references cent twice and new once (2^iters);
-        # rows are identical: every assigned cid is one of cent's, so
-        # {new} ∪ {cent ∖ new} == cent LEFT JOIN new with coalesce.
-        # persist the k-row codebook between iterations: the next round
-        # references it through both the scoring broadcast and this
-        # join — unpersisted, every reference re-executes every earlier
-        # iteration's corpus aggs (measured 4x for iters=2 at sf0.1).
-        cent = (
-            cent.select("cid", "cvec")
-            .join(new, "cid", "left")
-            .select(
-                "cid",
-                F.coalesce("_ncv", "cvec").alias("cvec"),
-                F.coalesce("n_members", F.lit(0).cast("long")).alias(
-                    "n_members"
-                ),
-            )
-            .persist()
-        )
-    return cent.select(
-        "cid", "n_members", F.posexplode("cvec").alias("i", "cs")
+        for r in partials.collect():
+            sums[r.pos] += r.svec
+            n_members[r.pos] += r.n
+        hit = n_members > 0
+        cmat[hit] = _requantize_int8(sums[hit])
+    pdf = pd.DataFrame({
+        "cid": np.repeat(cids, dim),
+        "n_members": np.repeat(n_members, dim),
+        "i": np.tile(np.arange(dim, dtype=np.int32), k),
+        "cs": cmat.reshape(-1).astype(np.int32),
+    })
+    return q.sparkSession.createDataFrame(
+        pdf, "cid long, n_members long, i int, cs int"
     )
 
 
@@ -1746,8 +1780,9 @@ def pq_codebook_train(
     is one (block, code)-keyed sum agg whose exchange carries B·k
     partial rows per task. Inter-iteration state persists lazily (KiB)
     and the keep-previous step is a left join + coalesce — 2 plan
-    references per round instead of 3 (the kmeans_codebook lesson; an
-    eager checkpoint was measured slower, one job per round).
+    references per round instead of 3 (plan growth 2^iters, not
+    3^iters; an eager checkpoint was measured slower, one job per
+    round).
     Assembling ``groupBy(cid)`` over the output in (b, i) order yields
     the (cid, cv) seeds frame the PQ paths take.
 
@@ -1830,10 +1865,10 @@ def pq_codebook_train(
             "n_members",
         )
         # keep-previous via ONE left join + coalesce (2 plan references
-        # per round, not 3 — see kmeans_codebook); rows identical to
-        # unionByName(new, cent.anti_join(new)): every assigned (b, cid)
-        # is one of cent's. Lazy persist: one job, duplicated references
-        # read the cache.
+        # per round, not 3 — 2^iters plan growth, not 3^iters); rows
+        # identical to unionByName(new, cent.anti_join(new)): every
+        # assigned (b, cid) is one of cent's. Lazy persist: one job,
+        # duplicated references read the cache.
         cent = (
             cent.select("b", "cid", "cq")
             .join(new, ["b", "cid"], "left")
@@ -1852,144 +1887,57 @@ def pq_codebook_train(
     )
 
 
-def _with_centroid_int8(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """:func:`assign_centroids_int8`'s kernel keeping EVERY input column
-    (r11, guide §2.4): consumers that previously joined the (vid, cid)
-    output back onto their row set by vid (labels, snapshot flags, the
-    k-means update's qvec) read their columns directly instead — the
-    join and its corpus exchange disappear. Adds ``cid``."""
-    zero = F.lit(0).cast("long")
-    c = cent.withColumn(
-        "ns2",
-        F.aggregate(
-            F.transform("cvec", lambda s: s.cast("long") * s.cast("long")),
-            zero,
-            lambda acc, x: acc + x,
-        ),
-    )
-    arr = c.agg(F.collect_list(F.struct("cid", "cvec", "ns2")).alias("_cents"))
-    rows = q.crossJoin(F.broadcast(arr))
-    scored = F.transform(
-        F.col("_cents"),
-        lambda cc: F.struct(
-            F.when(
-                cc["ns2"] > 0,
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qvec"),
-                        cc["cvec"],
-                        lambda x, y: x.cast("long") * y.cast("long"),
-                    ),
-                    zero,
-                    lambda acc, x: acc + x,
-                ).cast("double")
-                / F.sqrt(cc["ns2"].cast("double")),
-            ).alias("score"),
-            cc["cid"].alias("cid"),
-        ),
-    )
-
-    def _key(s: Column) -> Column:
-        rk = F.when(s["score"].isNull(), F.lit(1)).otherwise(F.lit(0))
-        neg = F.when(rk == F.lit(0), -s["score"]).otherwise(F.lit(0.0))
-        return F.struct(rk.alias("rk"), neg.alias("neg"), s["cid"].alias("cid"))
-
-    return (
-        rows.filter(F.size(F.col("_cents")) > 0)
-        .withColumn("cid", F.array_min(F.transform(scored, _key))["cid"])
-        .drop("_cents")
-    )
-
-
 def _with_centroid_int8_np(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """NumPy twin of :func:`_with_centroid_int8` for NON-ITERATIVE
-    callers holding a stable codebook (r12, guide §4.2): collect the
-    KiB (cid, cvec) codebook to the driver ONCE (k centroids × dim
-    int8 — metadata scale, the d17-probe/CC-fast-path precedent), then
-    assign whole Arrow batches with one int64 matmul instead of the
-    interpreted higher-order-function fold. The fold costs
-    ~k × 3·dim lambda-interpreter steps PER ROW (no codegen for
-    higher-order functions) — measured 24-29 s for ONE 18k-row × 207-
-    centroid assignment at sf1 on 32 cores; the matmul does the same
-    exact int64 arithmetic in ~0.1 s.
+    """Assign int8 vectors (``qvec``) to an int8 codebook (cid, cvec)
+    with :func:`_int8_argmax` over whole Arrow batches (r12, guide
+    §4.2): collect the KiB codebook to the driver ONCE (k centroids ×
+    dim int8 — metadata scale, the d17-probe/CC-fast-path precedent),
+    then assign each batch with one int64 matmul. A per-row
+    higher-order-function fold does not codegen (~k × 3·dim interpreted
+    steps per row): it measured 24-29 s for ONE 18k-row × 207-centroid
+    assignment at sf1 on 32 cores, the matmul ~0.1 s.
 
-    Bit-identical to the Catalyst kernel (pinned by
-    test_with_centroid_int8_np_matches_catalyst): dot and |c|² are
-    exact int64 (magnitudes ≤ dim·127² — far inside both int64 and the
-    2^53 double mantissa), score = double(dot)/sqrt(double(|c|²)) is
-    the same two correctly-rounded IEEE ops, ties break to the lowest
-    cid (centroids scanned in ascending-cid order, argmax keeps the
-    first max), zero-norm centroids rank last exactly like the NULL-
-    score struct key (rows fall to the lowest cid only when EVERY
-    centroid has zero norm). An empty codebook yields the empty frame
-    (the Catalyst form's ``filter(size > 0)``). Keeps every input
-    column; adds ``cid``.
+    The shared assignment kernel of the int8 codebook family — e8,
+    q10, st20 and st23 call it here, and :func:`kmeans_codebook` runs
+    the same :func:`_int8_argmax` inside each Lloyd iteration. An
+    empty codebook yields the empty frame. Keeps every input column;
+    adds ``cid``.
 
-    NOT used by the iterative trainers (kmeans_codebook /
-    pq_codebook_train): their one-job lazy composition would turn into
-    a driver job per iteration (the eager-per-iteration shape r11
-    measured 3x slower at sf0.1). Their conversion — collect the k-row
-    codebook per iteration, literal centroids — is the documented
-    next step for trainer-at-scale."""
+    Precondition: ``cent`` must be STABLE — deterministic or persisted.
+    It is collected eagerly, when this frame is composed, so its lineage
+    runs before the caller's action; a nondeterministic unpersisted
+    codebook plan could yield a snapshot that differs from other
+    references to the same frame. ``qvec`` holds no NULL vectors."""
+    import pandas as pd
     from pyspark.sql import types as T
 
-    rows = cent.select("cid", "cvec").collect()
+    rows = sorted(
+        (r[0], list(r[1])) for r in cent.select("cid", "cvec").collect()
+    )
     out_schema = T.StructType(list(q.schema.fields) + [
         T.StructField("cid", T.LongType(), True)
     ])
     if not rows:
         return q.sparkSession.createDataFrame([], out_schema)
-    rows.sort(key=lambda r: r[0])
+    cids = np.array([c for c, _ in rows], dtype=np.int64)
+    cmat = np.array([v for _, v in rows], dtype=np.int64)
 
     def _batches(it):
-        import numpy as np
-        import pandas as pd
-
-        cids = np.array([r[0] for r in rows], dtype=np.int64)
-        cmat = np.array([list(r[1]) for r in rows], dtype=np.int64)
-        ns2 = (cmat * cmat).sum(axis=1)
-        valid = ns2 > 0
-        vcids = cids[valid]
-        vmat_t = cmat[valid].T
-        norms = 1.0 if not valid.any() else np.sqrt(
-            ns2[valid].astype(np.float64)
-        )
         for pdf in it:
-            n = len(pdf.index)
-            if n == 0:
+            if len(pdf.index) == 0:
                 yield pdf.assign(cid=pd.Series(dtype="int64"))
                 continue
-            if valid.any():
-                qm = np.array(pdf["qvec"].tolist(), dtype=np.int64)
-                dots = qm @ vmat_t  # exact int64
-                scores = dots.astype(np.float64) / norms
-                chosen = vcids[np.argmax(scores, axis=1)]
-            else:
-                chosen = np.full(n, cids[0], dtype=np.int64)
-            yield pdf.assign(cid=chosen)
+            qm = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
+            yield pdf.assign(cid=cids[_int8_argmax(qm, cmat)])
 
     return q.mapInPandas(_batches, out_schema)
 
 
 def assign_centroids_int8_np(q: DataFrame, cent: DataFrame) -> DataFrame:
-    """:func:`assign_centroids_int8` through the NumPy kernel
-    (:func:`_with_centroid_int8_np`) — same (vid, cid) contract,
-    bit-identical assignments, for callers with a stable codebook."""
-    return _with_centroid_int8_np(q, cent).select("vid", "cid")
-
-
-def assign_centroids_int8(q: DataFrame, cent: DataFrame) -> DataFrame:
     """Exact-replay assignment of int8-quantized vectors (vid, qvec)
-    against an int8 codebook (cid, cvec): argmax of dot/sqrt(|c|²) from
-    exact int64s — e6/e8's shared kernel. Since r11 the argmax is a
-    per-row array-fold over a 1-row broadcast of the codebook (guide
-    §2.4): ZERO shuffles (the previous agg shape paid one corpus
-    exchange of N structs), so calling it per micro-batch costs
-    O(batch × codebook) map-side work only, and the groupBy("cid") the
-    st20/st23 sinks run next map-side-combines to |codebook| rows.
-    Scores are bit-identical (same int64 folds, same NULL-rank
-    ordering; `array_min` ≡ `min(struct)`). Returns (vid, cid)."""
-    return _with_centroid_int8(q, cent).select("vid", "cid")
+    against an int8 codebook (cid, cvec) through
+    :func:`_with_centroid_int8_np`. Returns (vid, cid)."""
+    return _with_centroid_int8_np(q, cent).select("vid", "cid")
 
 
 def codebook_drift(
@@ -2056,7 +2004,7 @@ def codebook_drift(
     # every codebook row reports, even if nothing assigned to it.
     # PERSIST the k-row result: it feeds BOTH the totals aggregate and
     # the final crossJoin — unpersisted, the whole corpus assignment
-    # cascade executes twice (measured ~2x at sf1, the e6 lesson again)
+    # cascade executes twice (measured ~2x at sf1)
     full = cent.select("cid").join(counts, "cid", "left").select(
         "cid",
         F.coalesce("n_base", zero).alias("n_base"),
@@ -3290,12 +3238,13 @@ def cluster_map(
     dominant label is the deterministic mode (count DESC, label ASC —
     the a17 rule). Every row of the report replays exactly.
 
-    Plan shape: e6's two training iterations (two corpus shuffles
-    each), then ONE more broadcast-assign pass + a (cid, label) count
-    agg that collapses map-side — the report table is k rows. At
-    100 TB nothing new shuffles the corpus beyond what training
-    already does; the assignment output is the same (vid, cid) frame a
-    persisted index would store anyway.
+    Plan shape: e6's training (one seed collect, then one shuffle-free
+    job per iteration, ending in a local k·dim codebook), then ONE
+    assignment pass (:func:`_with_centroid_int8_np`) + a (cid, label)
+    count agg that collapses map-side — the report table is k rows, and
+    that agg's k × labels partial rows per task are the only exchange.
+    The assignment output is the same (vid, cid) frame a persisted
+    index would store anyway.
 
     Returns (cid, n_members, top_label, top_label_n): k all-integer
     rows, n_members counted from the FINAL assignment (a third
@@ -3780,7 +3729,7 @@ def ann_rp_topk(
     ±int8 values (order-free — no float fold anywhere before the
     ranking scalar); the candidate ordering is dotP/sqrt(|vP|²), one
     correctly-rounded IEEE divide+sqrt from exact integers (the
-    :func:`assign_centroids_int8` scalar shape), ties to the lower id;
+    :func:`_int8_argmax` scalar shape), ties to the lower id;
     the rerank is n1's exact-cosine ordering.
 
     Plan shape: quantize (one global-max agg) → a k_proj-row broadcast

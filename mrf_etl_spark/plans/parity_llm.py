@@ -1732,10 +1732,13 @@ def _e6_iter_ctes(n: int, prev: int) -> str:
          FROM ux WHERE vid % {_E6_SEED_MOD} = 0),{_e6_iter_ctes(1, 0)},{_e6_iter_ctes(2, 1)}
        SELECT cid, nm AS n_members, i, cs FROM c2""",
     doc="e6: distributed spherical k-means codebook trainer (beyond-ref) "
-    "— Lloyd's iterations re-expressed as Spark aggregations: broadcast "
-    "the k-row codebook, map-side-combinable argmax assignment, "
-    "map-side-combinable per-dim int64 sums, e1-style int8 requantize "
-    "each round (keeps every product ≤ 64·127² at ANY corpus size — no "
+    "— Lloyd's iterations with the KiB k×dim codebook on the driver: "
+    "the seeds are collected once, then each iteration is ONE "
+    "shuffle-free Spark job whose partitions assign their Arrow batches "
+    "with the exact int64 matmul and emit only per-cluster partial "
+    "int64 sums; the driver adds them and applies the e1-style int8 "
+    "requantize (Spark's HALF_UP round) each round (keeps every product "
+    "≤ 64·127² at ANY corpus size — no "
     "overflow cliff, and the output is already the persisted index's "
     "int8 codebook format). INTEGER-EXACT iterative training: the "
     "oracle unrolls both iterations and replays assignments and "

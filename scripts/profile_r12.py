@@ -1,4 +1,4 @@
-"""Round-11 optimization profiler.
+"""Per-query plan and timing profiler (writes under plans/r12/).
 
 For each named query (default: a built-in heavy set), at $SPARK_GRAFT_SF_DIR
 (default sf0.1):

@@ -2788,6 +2788,106 @@ def test_kmeans_codebook_partition_invariant(spark):
     assert len(a) == 6 * 64  # 6 seeds at sf0.01 (ids 0,97,...,485)
 
 
+def test_requantize_int8_matches_spark_round(spark):
+    """The driver-side requantize (:func:`_requantize_int8`) must equal
+    Spark's e1 recipe ``F.round(x / (max|x| / 127)).cast("int")`` —
+    HALF_UP on the double — on planted values: ±k.5 ties (half-even
+    would differ), ±0.49999999999999994 (floor(|x| + 0.5) would give
+    1), ±126.5, an all-zero row (max|x| = 0 -> zeros), and int64 sums
+    that go through a non-unit scale."""
+    import random
+
+    import numpy as np
+
+    from mrf_etl_spark.operators.similarity import (
+        _requantize_int8,
+        quantize_int8,
+    )
+
+    below_half = 0.49999999999999994
+    # max|x| = 127 makes the scale exactly 1.0, so each planted value is
+    # the double that gets rounded
+    planted = [127.0, 0.5, -0.5, 2.5, -2.5, 3.5, -3.5, below_half,
+               -below_half, 126.5, -126.5, 1.4999999999999998, -64.5]
+    rng = random.Random(5)
+    rows = [
+        planted,
+        [-127.0] + planted[1:],
+        [0.0] * len(planted),
+        [float(rng.randint(-10**6, 10**6)) for _ in planted],
+        [508.0, 0.0, 254.0, 127.0, -381.0] + [0.0] * (len(planted) - 5),
+    ]
+    emb = spark.createDataFrame(
+        list(enumerate(rows)), "vec_id long, embedding array<double>"
+    )
+    want = [
+        r.qvec for r in sorted(quantize_int8(emb).collect(), key=lambda r: r.vec_id)
+    ]
+    got = _requantize_int8(np.array(rows))
+    assert got.tolist() == want
+    assert got[0].tolist()[1:10] == [1, -1, 3, -3, 4, -4, 0, 0, 127]
+    assert got[2].tolist() == [0] * len(planted)
+
+
+def test_int8_kernels_pickle_by_value(tmp_path):
+    """The NumPy kernels run inside mapInPandas closures on Python
+    workers, which do not have mrf_etl_spark on their path unless the
+    driver started in the repo root. They must pickle BY VALUE, so an
+    interpreter where the package cannot be imported still runs them."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from mrf_etl_spark.operators.similarity import (
+        _int8_argmax,
+        _requantize_int8,
+    )
+
+    blob = tmp_path / "kernels.pkl"
+    blob.write_bytes(cloudpickle.dumps((_int8_argmax, _requantize_int8)))
+    code = (
+        "import pickle, sys\n"
+        "import numpy as np\n"
+        "sys.modules['mrf_etl_spark'] = None  # any import of it now fails\n"
+        "argmax, requant = pickle.loads(open(sys.argv[1], 'rb').read())\n"
+        "print(argmax(np.array([[1, 0]]), np.array([[0, 1], [2, 0]])).tolist(),"
+        " requant(np.array([[254, -1]])).tolist())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(blob)],
+        cwd=tmp_path, env=env, capture_output=True, text=True,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split() == ["[1]", "[[127,", "-1]]"]
+
+
+def test_kmeans_codebook_no_seeds_and_empty_partitions(spark):
+    """No seed rows -> the empty codebook frame with the trained one's
+    schema; a 16-way repartition of 4 rows (at least 12 empty
+    partitions) trains the same codebook as one partition."""
+    from mrf_etl_spark.operators.similarity import kmeans_codebook
+
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [2.0, 1.0, 0.0, 0.0]),
+        (2, [0.0, 3.0, 0.0, -1.0]),
+        (97, [0.0, 1.0, 0.0, 0.0]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    one = kmeans_codebook(emb.coalesce(1), dim=4, seed_mod=97, iters=2)
+    many = kmeans_codebook(emb.repartition(16), dim=4, seed_mod=97, iters=2)
+    assert sorted(map(tuple, many.collect())) == sorted(map(tuple, one.collect()))
+    assert len(one.collect()) == 2 * 4
+    none = kmeans_codebook(
+        emb.filter(F.col("vec_id") % 97 != 0), dim=4, seed_mod=97, iters=2
+    )
+    assert none.collect() == []
+    assert none.schema == one.schema
+
+
 def test_kmeans_codebook_improves_ivf_recall(spark):
     """Composability: feeding e6's trained codebook into ivf_topk
     (centroids=) must not DEGRADE recall@5 vs the modulo stand-in seeds
@@ -5029,19 +5129,32 @@ def test_media_near_dup_posting_pairs_match_selfjoin_semantics(spark):
     assert got == want
 
 
-def test_with_centroid_int8_np_matches_catalyst(spark):
-    """r12 §4.2 pin: the NumPy assignment kernel (driver-collected
-    codebook + int64 matmul) must produce bit-identical cids to the
-    Catalyst array-fold kernel on random int8 inputs INCLUDING exact
-    score ties (duplicate centroids), zero-norm centroids (NULL-score
-    rank-last), an all-zero codebook (lowest cid wins), and an empty
-    codebook (empty result). Extra input columns must ride through."""
+def _int8_assign_reference(qvec, cents):
+    """Scalar reference for the int8 assignment rule: exact int dot and
+    |c|², score float(dot) / sqrt(float(|c|²)), zero-norm centroids rank
+    last, ties to the lowest cid; None for an empty codebook."""
+    import math
+
+    best = None
+    for cid, cvec in sorted(cents):
+        ns2 = sum(c * c for c in cvec)
+        dot = sum(x * c for x, c in zip(qvec, cvec))
+        key = (0, -(float(dot) / math.sqrt(float(ns2)))) if ns2 else (1, 0.0)
+        if best is None or key < best[0]:
+            best = (key, cid)
+    return None if best is None else best[1]
+
+
+def test_with_centroid_int8_np_matches_scalar_reference(spark):
+    """The NumPy assignment kernel (driver-collected codebook + int64
+    matmul) must produce the cids of a pure-Python scalar reference on
+    random int8 inputs INCLUDING exact score ties (duplicate centroids),
+    zero-norm centroids (rank last), an all-zero codebook (lowest cid
+    wins), and an empty codebook (empty result). Extra input columns
+    must ride through."""
     import random
 
-    from mrf_etl_spark.operators.similarity import (
-        _with_centroid_int8,
-        _with_centroid_int8_np,
-    )
+    from mrf_etl_spark.operators.similarity import _with_centroid_int8_np
 
     rng = random.Random(17)
     dim = 8
@@ -5067,13 +5180,16 @@ def test_with_centroid_int8_np_matches_catalyst(spark):
         if not cents:
             cent = cent.filter(F.lit(False))
         want = {
-            (r.vid, r.tag): r.cid
-            for r in _with_centroid_int8(q, cent).collect()
+            (vid, tag): _int8_assign_reference(qv, cents)
+            for vid, qv, tag in vecs
+            if cents
         }
         got = {
             (r.vid, r.tag): r.cid
             for r in _with_centroid_int8_np(q, cent).collect()
         }
         assert got == want, (len(cents), {k: (got.get(k), want.get(k)) for k in set(got) ^ set(want) or list(got)[:3]})
-        if not cents:
-            assert got == {}
+    # the planted rows really exercise the tie and zero-norm rules
+    assert _int8_assign_reference(base_cents[0][1], base_cents) == 3
+    assert _int8_assign_reference([0] * dim, base_cents) == 1
+    assert _int8_assign_reference(vecs[0][1], [(5, [0] * dim), (2, [0] * dim)]) == 2

@@ -339,31 +339,42 @@ def test_scd2_build_single_window_shuffle(spark):
     assert n <= 1, plan
 
 
-def test_e6_kmeans_codebook_persists_iteration_state(spark):
-    """e6's per-iteration k-row codebook must be persisted: the next
-    iteration references it three times (scoring broadcast, keep-previous
-    anti-join, final select), and without the cache every reference
-    re-executes every earlier iteration's corpus aggs (measured 4x for
-    iters=2 at sf0.1). The raw Exchange count of the textual plan is
-    meaningless here — cached subtrees print their full lineage — so the
-    pin is the cache itself: the final plan must read iteration state
-    through InMemoryTableScan, more than once."""
-    from mrf_etl_spark.operators.similarity import kmeans_codebook
+def test_e6_kmeans_codebook_never_recomputes_iteration_state(spark):
+    """e6's per-iteration k-row codebook must never be recomputed. It
+    lives on the driver as a NumPy array between iterations, so: the
+    seeds are collected once and each Lloyd iteration is one Spark job
+    (at most iters + 2 jobs including delivery); the returned codebook
+    is a local frame whose plan scans no Parquet (no corpus lineage
+    left to re-execute); and neither e6 nor q10, its consumer, leaves a
+    persisted RDD behind."""
+    from mrf_etl_spark.operators.similarity import cluster_map, kmeans_codebook
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    plan = (
-        kmeans_codebook(emb, iters=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    iters = 2
+    group = "e6-iteration-state"
+    sc.setJobGroup(group, "e6 job budget")
+    try:
+        cb = kmeans_codebook(emb, iters=iters)
+        rows = cb.collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 6 * 64
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= iters + 2, jobs
+    plan = cb._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and "parquet" not in plan.lower(), plan
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+    cluster_map(emb, iters=iters).collect()
+    assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_e7_pq_codebook_persists_iteration_state(spark):
-    """e7 inherits e6's iteration-state rule: the per-iteration B·k-row
-    codebook must be read back through InMemoryTableScan, not recomputed
-    per reference."""
+    """e7's per-iteration B·k-row codebook must be read back through
+    InMemoryTableScan, not recomputed per reference (the raw Exchange
+    count is meaningless here — cached subtrees print their full
+    lineage — so the pin is the cache itself)."""
     from mrf_etl_spark.operators.similarity import pq_codebook_train
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
